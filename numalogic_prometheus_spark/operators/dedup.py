@@ -65,19 +65,6 @@ def tokens_col(text: Column) -> Column:
     return F.split(text, " ")
 
 
-def shingles_col(text: Column, w: int = 3) -> Column:
-    """w-token shingles: slice windows out of the token array — a pure
-    row expression (no explode)."""
-    toks = tokens_col(text)
-    n = F.size(toks)
-    return F.when(n < w, F.array(F.concat_ws(" ", toks))).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), n - (w - 1)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, w)),
-        )
-    )
-
-
 def minhash_signature(items: Column, k: int = 8) -> Column:
     """k seeded min-hashes over a set of strings, as one array column.
 

@@ -471,7 +471,6 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SHINGLE_C_SQL = "(" + ", ".join(str(c) for c in D.SHINGLE_C) + ")"
 _SHINGLE_HASH_SQL = f"""
         SELECT doc_id,
                list_distinct(list_transform(

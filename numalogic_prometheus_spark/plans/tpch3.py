@@ -35,11 +35,8 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from numalogic_prometheus_spark.plans import register
+from numalogic_prometheus_spark.plans.tpch2 import _revenue
 from numalogic_prometheus_spark.sources.tables import load_table
-
-
-def _revenue() -> F.Column:
-    return F.col("l_extendedprice") * (1 - F.col("l_discount"))
 
 
 @register(

@@ -52,7 +52,6 @@ from numalogic_prometheus_spark.functions.vectors import (
 )
 
 _INDEX_SCHEMA = "vec_id long, cell long, v array<double>, nv double"
-_CENT_SCHEMA = "cent_id long, cv array<double>, nc double"
 _CENTROID_FILTER = "vec_id % 31 = 0"  # mirrors plans/vectors2.py
 
 

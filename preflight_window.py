@@ -1,40 +1,23 @@
 """Driver-window pre-flight: the first 50 queries() entries (the
 driver's check window) through the driver-mimic compare on a VANILLA
-(driver-shaped, Arrow-off) session — run before every rotation commit
-and again on final code each round. The vanilla session is the point
-(VERDICT r12 #2): a window member whose correctness depends on an
-engine-session conf must fail HERE, not in the driver.
+(driver-shaped, Arrow-off) session. A window member whose correctness
+depends on an engine-session conf must fail HERE, not in the driver.
 
 Usage: python preflight_window.py [sf_dir]   (default /root/testdata/sf0.01)
 """
-import os, sys, time, traceback
-# derive the repo root from this file's location (r13 ADVICE: a
-# hardcoded path imports the wrong code from any other checkout)
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-from numalogic_prometheus_spark import plans
-from sweep_oracles import build_vanilla_session
-from tests.oracle_harness import compare, run_oracle
+import sys
 
-spark = build_vanilla_session()
-sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-q, o = plans.all_queries(), plans.all_oracles()
-window = list(q)[:50]
-ok = bad = 0
-for name in window:
-    t0 = time.perf_counter()
-    try:
-        if name in o:
-            compare(q[name](spark, sf_dir), run_oracle(sf_dir, o[name]), name)
-            tag = "hash"
-        else:
-            n = len(q[name](spark, sf_dir).collect())
-            if n == 0:  # explicit raise: assert dies under -O
-                raise ValueError(f"{name}: rows-only entry returned 0 rows")
-            tag = f"rows-only {n}"
-        print(f"PASS {name} {time.perf_counter()-t0:.1f}s ({tag})", flush=True)
-        ok += 1
-    except Exception as exc:
-        traceback.print_exc()
-        print(f"FAIL {name} {type(exc).__name__}: {str(exc)[:200]}", flush=True)
-        bad += 1
-print(f"# window pre-flight: {ok}/{ok+bad} green, {bad} failures")
+from sweep_oracles import build_vanilla_session, sweep
+
+from numalogic_prometheus_spark import plans
+
+
+def main() -> None:
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    q = plans.all_queries()
+    _, bad = sweep(build_vanilla_session(), sf_dir, list(q)[:50], q, plans.all_oracles())
+    sys.exit(1 if bad else 0)
+
+
+if __name__ == "__main__":
+    main()

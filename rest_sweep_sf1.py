@@ -2,19 +2,13 @@
 already proven by the committed heaviest-21 spot sweep
 (SWEEP_sf1_spot.log). Union of the two logs == the FULL registry
 differential-verified at ~10x the driver's sf0.1 data
-(.testdata_sf1, built by make_bigsf.py).
+(.testdata_sf1, built by make_bigsf.py). Entries registered after the
+spot sweep ran are picked up here because they are absent from its log.
 
-The spot sweep (VERDICT r8 #2) proved the heavy tail; this run walks
-the remaining entries, which are individually light but collectively
-the breadth of the surface — sum-overflow, timestamp-edge and approx-
-tie divergence would first appear at this volume. Entries registered
-after the spot sweep ran (round-9 additions) are picked up here
-automatically because they are absent from the spot log.
-
-Timing caveat: this run executes in the BACKGROUND of an active dev
-session, so per-entry seconds are contended and not comparable to the
-quiet-host spot-sweep numbers; the artifact's claim is correctness
-(PASS/FAIL), not latency.
+Timing caveat: this run executes in the background of other work, so
+per-entry seconds are contended and not comparable to the quiet-host
+spot-sweep numbers; the artifact's claim is correctness (PASS/FAIL),
+not latency.
 
 Writes SWEEP_sf1_rest.log (committed); exits non-zero on any mismatch.
 Usage: python rest_sweep_sf1.py [name ...]
@@ -27,27 +21,18 @@ from __future__ import annotations
 import os
 import re
 import sys
-import time
-import traceback
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from sweep_oracles import REPO, sweep
 
 from numalogic_prometheus_spark import plans
 from numalogic_prometheus_spark.session import get_session
-from tests.oracle_harness import compare, run_oracle
 
-_REPO = os.path.dirname(os.path.abspath(__file__))
-SF_DIR = os.path.join(_REPO, ".testdata_sf1")
+SF_DIR = os.path.join(REPO, ".testdata_sf1")
 
 
 def already_proven() -> set[str]:
-    done: set[str] = set()
-    with open(os.path.join(_REPO, "SWEEP_sf1_spot.log")) as f:
-        for line in f:
-            m = re.match(r"PASS (\S+) ", line.strip())
-            if m:
-                done.add(m.group(1))
-    return done
+    with open(os.path.join(REPO, "SWEEP_sf1_spot.log")) as f:
+        return {m.group(1) for m in re.finditer(r"^PASS (\S+) ", f.read(), re.M)}
 
 
 def main() -> None:
@@ -66,37 +51,8 @@ def main() -> None:
             f"entries not in SWEEP_sf1_spot.log ({len(done)} already "
             "proven there); contended-background timings\n"
         )
-    log_path = os.path.join(_REPO, "SWEEP_sf1_rest.log")
-    ok = bad = 0
-    t_all = time.perf_counter()
-    with open(log_path, mode) as log:
-        log.write(header)
-        for name in names:
-            t0 = time.perf_counter()
-            try:
-                compare(
-                    queries[name](spark, SF_DIR),
-                    run_oracle(SF_DIR, oracles[name]),
-                    name,
-                )
-                line = f"PASS {name} {time.perf_counter() - t0:.1f}s"
-                ok += 1
-            except Exception as exc:  # noqa: BLE001
-                line = (
-                    f"FAIL {name} {time.perf_counter() - t0:.1f}s "
-                    f"{type(exc).__name__}: {str(exc)[:300]}"
-                )
-                traceback.print_exc()
-                bad += 1
-            print(line, flush=True)
-            log.write(line + "\n")
-            log.flush()
-        summary = (
-            f"# {ok}/{ok + bad} green, {bad} mismatches, "
-            f"{time.perf_counter() - t_all:.0f}s total"
-        )
-        print(summary)
-        log.write(summary + "\n")
+    _, bad = sweep(spark, SF_DIR, names, queries, oracles,
+                   os.path.join(REPO, "SWEEP_sf1_rest.log"), header, mode)
     sys.exit(1 if bad else 0)
 
 

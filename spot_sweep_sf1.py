@@ -1,15 +1,12 @@
-"""sf1.0-class oracle spot-sweep (VERDICT r8 #2, second half): the 20
-heaviest entries of the sf0.1 sweep, re-verified differentially at ~10×
-the data (`.testdata_sf1`, built by make_bigsf.py from the driver's
-sf0.1 tables — 6M lineitem / 1M events / 50k documents rows).
+"""sf1.0-class oracle spot-sweep: the 20 heaviest entries of the sf0.1
+sweep, re-verified differentially at ~10× the data (`.testdata_sf1`,
+built by make_bigsf.py from the driver's sf0.1 tables — 6M lineitem /
+1M events / 50k documents rows).
 
-Unblocked by the round-9 oracle linearization: before it, the
-`ts_linear_interpolate` grid-cross oracle alone was O(grid·samples) and
-the mad/sliding-quantile pair joins O(rows·window) — at 10× data those
-forms dominate the sweep; the ASOF/RANGE-frame rewrites scale with the
-engine. Heaviest-20 is taken from the committed SWEEP_sf0.1.log (the
-three rewritten entries are appended explicitly: the point is to prove
-the NEW oracle forms at scale even though they no longer rank).
+Heaviest-20 is taken from the committed SWEEP_sf0.1.log. Three entries
+whose oracles were rewritten into linear ASOF/RANGE-frame forms are
+appended explicitly: the point is to prove those oracle forms at scale
+even when they no longer rank.
 
 Writes SWEEP_sf1_spot.log (committed); exits non-zero on any mismatch.
 Usage: python spot_sweep_sf1.py
@@ -20,19 +17,15 @@ from __future__ import annotations
 import os
 import re
 import sys
-import time
-import traceback
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from sweep_oracles import REPO, sweep
 
 from numalogic_prometheus_spark import plans
 from numalogic_prometheus_spark.session import get_session
-from tests.oracle_harness import compare, run_oracle
 
-_REPO = os.path.dirname(os.path.abspath(__file__))
-SF_DIR = os.path.join(_REPO, ".testdata_sf1")
+SF_DIR = os.path.join(REPO, ".testdata_sf1")
 N_HEAVIEST = 20
-# the r9-rewritten oracle forms, proven at scale regardless of rank
+# the rewritten oracle forms, proven at scale regardless of rank
 ALWAYS = (
     "ts_linear_interpolate",
     "promql_mad_over_time",
@@ -41,54 +34,24 @@ ALWAYS = (
 
 
 def heaviest(n: int) -> list[str]:
-    by_time: list[tuple[float, str]] = []
-    with open(os.path.join(_REPO, "SWEEP_sf0.1.log")) as f:
-        for line in f:
-            m = re.match(r"PASS (\S+) ([0-9.]+)s", line.strip())
-            if m:
-                by_time.append((float(m.group(2)), m.group(1)))
-    by_time.sort(reverse=True)
-    return [name for _, name in by_time[:n]]
+    with open(os.path.join(REPO, "SWEEP_sf0.1.log")) as f:
+        by_time = [
+            (float(m.group(2)), m.group(1))
+            for m in re.finditer(r"^PASS (\S+) ([0-9.]+)s", f.read(), re.M)
+        ]
+    return [name for _, name in sorted(by_time, reverse=True)[:n]]
 
 
 def main() -> None:
     os.environ.setdefault("SPARK_DRIVER_MEM", "12g")
     spark = get_session(app_name="spot-sweep-sf1")
-    queries, oracles = plans.all_queries(), plans.all_oracles()
     names = list(dict.fromkeys(heaviest(N_HEAVIEST) + list(ALWAYS)))
-    log_path = os.path.join(_REPO, "SWEEP_sf1_spot.log")
-    ok = bad = 0
-    t_all = time.perf_counter()
-    with open(log_path, "w") as log:
-        log.write(
-            f"# sf1.0-class spot sweep at {SF_DIR} "
-            f"({len(names)} heaviest entries, 10x-replicated sf0.1)\n"
-        )
-        for name in names:
-            t0 = time.perf_counter()
-            try:
-                compare(
-                    queries[name](spark, SF_DIR),
-                    run_oracle(SF_DIR, oracles[name]),
-                    name,
-                )
-                line = f"PASS {name} {time.perf_counter() - t0:.1f}s"
-                ok += 1
-            except Exception as exc:  # noqa: BLE001
-                line = (
-                    f"FAIL {name} {time.perf_counter() - t0:.1f}s "
-                    f"{type(exc).__name__}: {str(exc)[:300]}"
-                )
-                traceback.print_exc()
-                bad += 1
-            print(line, flush=True)
-            log.write(line + "\n")
-        summary = (
-            f"# {ok}/{ok + bad} green, {bad} mismatches, "
-            f"{time.perf_counter() - t_all:.0f}s total"
-        )
-        print(summary)
-        log.write(summary + "\n")
+    header = (
+        f"# sf1.0-class spot sweep at {SF_DIR} "
+        f"({len(names)} heaviest entries, 10x-replicated sf0.1)\n"
+    )
+    _, bad = sweep(spark, SF_DIR, names, plans.all_queries(), plans.all_oracles(),
+                   os.path.join(REPO, "SWEEP_sf1_spot.log"), header)
     sys.exit(1 if bad else 0)
 
 

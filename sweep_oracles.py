@@ -1,30 +1,26 @@
-"""Full-registry oracle parity sweep at an arbitrary scale factor
-(VERDICT r7 next-round #3): every oracle-backed entry through the
-driver-mimic DuckDB compare (tests/oracle_harness.py — row count,
-sorted columns, canonicalized value multiset) in ONE Spark session.
+"""Oracle parity sweep at an arbitrary scale factor: every oracle-backed
+entry through the driver-mimic DuckDB compare (tests/oracle_harness.py:
+row count, sorted columns, canonicalized value multiset) in ONE Spark
+session. Usage:
 
-All prior hash verification ran at sf0.001 (pytest) / sf0.01 (driver);
-sf0.1 is where sum-overflow, approx-tie and timestamp-edge divergence
-would first appear. Usage:
-
-    SPARK_GRAFT_SWEEP_SF_DIR=/root/testdata/sf0.1 python sweep_oracles.py
+    SPARK_GRAFT_SWEEP_SF_DIR=/root/testdata/sf0.1 python sweep_oracles.py [name ...]
 
 Writes one line per entry to stdout and a committed log
-(SWEEP_sf{sf}.log); exits non-zero on any mismatch.
+(SWEEP_sf{sf}.log); exits non-zero on any mismatch. With names, runs
+only those entries and appends to the log instead of rewriting it.
 
-Vanilla-session mode (VERDICT r12 #2 — the r12 driver failure was an
-entry whose *fixture writer* silently depended on the engine session's
-Arrow conf, which `RUNTIME_INVARIANTS` deliberately does NOT re-pin):
+Vanilla-session mode:
 
     SPARK_GRAFT_SWEEP_VANILLA=1 SPARK_GRAFT_SWEEP_SF_DIR=... python sweep_oracles.py
 
-builds the most vanilla session the driver contract allows — bare
+builds the most vanilla session the driver contract allows (bare
 ``SparkSession.builder.master(local[N])`` plus shuffle partitions, NO
 engine confs; only what ``sources.tables.load_table`` itself re-pins
-applies — runs EVERY registered entry (oracle-backed through the DuckDB
+applies), runs EVERY registered entry (oracle-backed through the DuckDB
 compare, rows-only through a collect-count > 0 check, since the driver
-checks rows-only entries too and r12's failure was one), and writes
-``SWEEP_sf{sf}_vanilla.log``."""
+checks rows-only entries too) and writes ``SWEEP_sf{sf}_vanilla.log``.
+An entry whose correctness silently depends on an engine-session conf
+fails here rather than in the driver."""
 
 from __future__ import annotations
 
@@ -33,7 +29,8 @@ import sys
 import time
 import traceback
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
 
 from numalogic_prometheus_spark import plans
 from numalogic_prometheus_spark.session import get_session
@@ -44,7 +41,7 @@ def build_vanilla_session():
     """The driver-shaped session: master + shuffle partitions and NOTHING
     else — no Arrow, no AQE tweaks, no timezone/map-dedup/nanos confs
     (load_table re-pins the runtime invariants itself; anything a query
-    needs beyond that is a latent driver failure, the r12 class)."""
+    needs beyond that is a latent driver failure)."""
     from pyspark.sql import SparkSession
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
@@ -63,72 +60,70 @@ def build_vanilla_session():
     return spark
 
 
-def main() -> None:
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_SWEEP_SF_DIR", "/root/testdata/sf0.1"
-    )
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    os.environ.setdefault("SPARK_DRIVER_MEM", "12g")
-    vanilla = os.environ.get("SPARK_GRAFT_SWEEP_VANILLA") == "1"
-    if vanilla:
-        spark = build_vanilla_session()
-    else:
-        spark = get_session(app_name=f"sweep-sf{sf}")
-    queries, oracles = plans.all_queries(), plans.all_oracles()
-    suffix = "_vanilla" if vanilla else ""
-    log_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        f"SWEEP_sf{sf}{suffix}.log",
-    )
-    # The vanilla sweep covers the WHOLE registry: the driver checks
-    # rows-only entries too (rows>0, no error) and the r12 failure was
-    # exactly such an entry.
-    names = sorted(queries) if vanilla else sorted(oracles)
+def sweep(spark, sf_dir, names, queries, oracles, log_path=None, header="",
+          mode="w") -> tuple[int, int]:
+    """Run each named entry at ``sf_dir``: compare it with its oracle in
+    ``oracles`` when it has one, else require rows > 0. Prints one
+    PASS/FAIL line per entry and a summary, mirrors them after ``header``
+    into ``log_path`` (opened with ``mode``) and returns (ok, bad)."""
     ok = bad = 0
     t_all = time.perf_counter()
-    with open(log_path, "w") as log:
-        session_note = "vanilla driver-shaped session" if vanilla else "engine session"
-        log.write(
-            f"# oracle parity sweep at {sf_dir} "
-            f"({len(names)} entries, {session_note})\n"
-        )
+    with open(log_path or os.devnull, mode) as log:
+        log.write(header)
+
+        def emit(line: str) -> None:
+            print(line, flush=True)
+            log.write(line + "\n")
+            log.flush()
+
         for name in names:
             t0 = time.perf_counter()
             try:
+                df = queries[name](spark, sf_dir)
                 if name in oracles:
-                    compare(
-                        queries[name](spark, sf_dir),
-                        run_oracle(sf_dir, oracles[name]),
-                        name,
-                    )
-                    line = f"PASS {name} {time.perf_counter() - t0:.1f}s"
+                    compare(df, run_oracle(sf_dir, oracles[name]), name)
+                    note = ""
                 else:
-                    n = len(queries[name](spark, sf_dir).collect())
+                    n = len(df.collect())
                     if n == 0:  # explicit raise: assert dies under -O
-                        raise ValueError(
-                            f"{name}: rows-only entry returned 0 rows"
-                        )
-                    line = (
-                        f"PASS {name} {time.perf_counter() - t0:.1f}s "
-                        f"(rows-only, {n} rows)"
-                    )
+                        raise ValueError(f"{name}: rows-only entry returned 0 rows")
+                    note = f" (rows-only, {n} rows)"
+                line = f"PASS {name} {time.perf_counter() - t0:.1f}s{note}"
                 ok += 1
             except Exception as exc:  # noqa: BLE001
+                traceback.print_exc()
                 line = (
                     f"FAIL {name} {time.perf_counter() - t0:.1f}s "
                     f"{type(exc).__name__}: {str(exc)[:300]}"
                 )
-                traceback.print_exc()
                 bad += 1
-            print(line, flush=True)
-            log.write(line + "\n")
-            log.flush()
-        summary = (
+            emit(line)
+        emit(
             f"# {ok}/{ok + bad} green, {bad} mismatches, "
             f"{time.perf_counter() - t_all:.0f}s total"
         )
-        print(summary)
-        log.write(summary + "\n")
+    return ok, bad
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SWEEP_SF_DIR", "/root/testdata/sf0.1")
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    os.environ.setdefault("SPARK_DRIVER_MEM", "12g")
+    vanilla = os.environ.get("SPARK_GRAFT_SWEEP_VANILLA") == "1"
+    spark = build_vanilla_session() if vanilla else get_session(app_name=f"sweep-sf{sf}")
+    queries, oracles = plans.all_queries(), plans.all_oracles()
+    only = sys.argv[1:]
+    # The vanilla sweep covers the WHOLE registry: the driver checks
+    # rows-only entries too (rows>0, no error).
+    names = only or sorted(queries if vanilla else oracles)
+    session_note = "vanilla driver-shaped session" if vanilla else "engine session"
+    _, bad = sweep(
+        spark, sf_dir, names, queries, oracles,
+        log_path=os.path.join(REPO, f"SWEEP_sf{sf}{'_vanilla' if vanilla else ''}.log"),
+        header=f"# oracle parity sweep at {sf_dir} ({len(names)} entries, "
+        f"{session_note}{', appended run' if only else ''})\n",
+        mode="a" if only else "w",
+    )
     sys.exit(1 if bad else 0)
 
 

@@ -70,6 +70,38 @@ def test_check_window_names_resolve_and_fill():
     assert names[:50] == list(cf)
 
 
+# sha256 over the ordered registry: name, NUL, oracle SQL ("" for
+# rows-only entries), NUL, for every entry of all_queries(). A rename,
+# reorder or oracle edit changes it; a deliberate one updates it here.
+_REGISTRY_SHA256 = "dac1c6d42d55d8c73879fe187a29732ec949f7ee4c469dca149bc1c6390dc205"
+
+_HASH_SCRIPT = """
+import hashlib
+import __spark_entry__ as e
+q, o = e.queries(), e.oracle_sql()
+h = hashlib.sha256()
+for name in q:
+    h.update(f"{name}\\0{o.get(name, '')}\\0".encode())
+print(len(q), len(o), h.hexdigest())
+"""
+
+
+def test_registry_names_order_and_oracles_are_pinned():
+    """Hashed in a fresh interpreter, as the driver sees it: in this
+    process, test modules that import plan modules directly have already
+    changed the order in which entries registered."""
+    import pathlib
+    import subprocess
+    import sys
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    out = subprocess.run(
+        [sys.executable, "-c", _HASH_SCRIPT], cwd=root,
+        capture_output=True, text=True, check=True,
+    ).stdout.split()
+    assert out == ["263", "253", _REGISTRY_SHA256]
+
+
 def test_doc_counts_match_live_registry():
     """VERDICT r10 #6 (third straight round with a count nit): the
     COVERAGE.md header and README coverage section state live registry

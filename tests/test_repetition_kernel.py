@@ -7,8 +7,9 @@ Parity is asserted on the full sf0.001 corpus (bit-identical doubles —
 the kernel replays the same IEEE division sequence over the same exact
 integers) and on synthetic edge rows the corpus cannot cover: NULL
 text and empty/whitespace-only text (explode emits nothing → the doc
-drops), a single-token doc (bigram leg filtered → coalesce-0), and
-repeated-token/bigram-dominance shapes with hand-computed values."""
+drops), a single-token doc (bigram leg filtered → coalesce-0),
+repeated-token/bigram-dominance shapes with hand-computed values, and
+NULL or zero char denominators (NULL char fractions, not a raise)."""
 
 from __future__ import annotations
 
@@ -102,13 +103,21 @@ def test_kernel_edge_rows(spark):
         (4, "hello", n_chars("hello")),  # single token: bigram leg empty
         (5, "a a a a", n_chars("a a a a")),       # one token repeated
         (6, "ab cd ab cd ab", n_chars("ab cd ab cd ab")),  # bigram dominance
+        (7, "ab cd", None),              # NULL n_chars -> NULL char fracs
+        (8, "ab cd", 1),                 # chars == 1 - 2 + 1 == 0 -> NULL
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string, n_chars long")
     got = {r[0]: r for r in quality_repetition_kernel(docs).collect()}
-    ref = {r[0]: r for r in _jvm_form(docs).collect()}
-    assert set(got) == {4, 5, 6} and set(ref) == {4, 5, 6}
-    for did in (4, 5, 6):
+    # doc 8 stays out of the JVM form: its x / 0.0 raises DIVIDE_BY_ZERO
+    # under ANSI mode (and is NULL without it)
+    ref = {r[0]: r for r in _jvm_form(docs.filter("doc_id != 8")).collect()}
+    assert set(got) == {4, 5, 6, 7, 8} and set(ref) == {4, 5, 6, 7}
+    for did in (4, 5, 6, 7):
         assert tuple(got[did]) == tuple(ref[did]), (did, got[did], ref[did])
+    for did in (7, 8):
+        assert got[did]["top_token_char_frac"] is None, got[did]
+        assert got[did]["top_bigram_char_frac"] is None, got[did]
+        assert got[did]["top_token_frac"] == 0.5, got[did]
     # hand-computed pins (independent of both implementations)
     d4 = got[4]
     assert (d4["n_tokens"], d4["n_distinct"], d4["top_count"]) == (1, 1, 1)
