@@ -1,17 +1,16 @@
-"""Quiet-window re-audit of the 12 entries HEADLINE_EXCLUDED gained in
-r16 (ADVICE r16: they were excluded on the evidence of ONE contended
-sf0.1 sweep window — 1074 s vs r15's 695 s on identical oracle code —
-and the spark-side re-measures themselves ran against a 2.3x-floor
-sentinel). This script produces the re-auditable record the advice
-asked for: spark-side min-of-3 at sf0.1 for each excluded entry,
-interleaved with the serial sentinel, refusing to run on a loaded
-host, and with the sentinel floor ratio stamped into the artifact so
-the window's quality is part of the evidence.
+"""Re-audit of the 12 entries HEADLINE_EXCLUDED gained in r16: they were
+excluded on the evidence of one contended sf0.1 sweep window. This
+script measures spark-side min-of-3 at sf0.1 for each excluded entry and
+records, for every timed pass, the share of the machine's CPU that
+processes outside this script's tree took (bench.external_share), so the
+window's quality is part of the evidence. `quiet_window` is true iff
+every entry has a pass at or under bench.EXTERNAL_SHARE_BOUND, the same
+rule as the bench's `contended`.
 
-Decision rule (bench.py's own r11 threshold): an entry whose QUIET
-spark-side min-of-3 exceeds 2 s belongs in HEADLINE — the audit prints
-a `should_promote` list; an empty list means the exclusions stand on
-quiet evidence. Artifact: EXCLUDED_AUDIT_r17.json (committed).
+Decision rule (bench.py's own 2 s threshold): an entry whose spark-side
+min-of-3 exceeds 2 s belongs in HEADLINE. The audit prints a
+`should_promote` list; an empty list on a quiet window means the
+exclusions stand. Artifact: EXCLUDED_AUDIT_r17.json (committed).
 
 Usage: python excluded_audit_r17.py
 """
@@ -25,7 +24,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from bench import SENTINEL_R7_FLOOR_S
+from bench import EXTERNAL_SHARE_BOUND, cpu_sample, external_share
 from numalogic_prometheus_spark import plans
 from numalogic_prometheus_spark.session import get_session
 
@@ -43,7 +42,6 @@ R16_EXCLUDED = (
     "text_simhash_signatures",
     "tpch_q9_product_profit",
 )
-SENTINEL = "counter_hourly"
 PASSES = 3
 
 
@@ -52,41 +50,40 @@ def _noop(df) -> None:
 
 
 def main() -> None:
-    ncpu = os.cpu_count() or 8
-    if os.getloadavg()[0] > ncpu / 4:
-        print(json.dumps({"error": "host loaded; rerun on a quiet window",
-                          "loadavg": os.getloadavg()[0]}))
-        return
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.environ.setdefault("SPARK_DRIVER_MEM", "12g")
     spark = get_session(app_name="excluded_audit_r17")
     queries = plans.all_queries()
     warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
-    for name in (SENTINEL,) + R16_EXCLUDED:
+    for name in R16_EXCLUDED:
         _noop(queries[name](spark, warm_dir))
 
-    sentinel_series: list[float] = []
     series: dict[str, list[float]] = {n: [] for n in R16_EXCLUDED}
+    shares: dict[str, list[float]] = {n: [] for n in R16_EXCLUDED}
     for _ in range(PASSES):
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        _noop(queries[SENTINEL](spark, sf_dir))
-        sentinel_series.append(round(time.perf_counter() - t0, 4))
         for name in R16_EXCLUDED:
             spark.catalog.clearCache()
+            before = cpu_sample()
             t0 = time.perf_counter()
             _noop(queries[name](spark, sf_dir))
-            series[name].append(round(time.perf_counter() - t0, 4))
+            took = time.perf_counter() - t0
+            series[name].append(round(took, 4))
+            shares[name].append(
+                round(external_share(before, cpu_sample(), took), 3)
+            )
 
-    floor_ratio = round(min(sentinel_series) / SENTINEL_R7_FLOOR_S, 3)
-    rows = {n: {"min": min(s), "series": s} for n, s in series.items()}
+    rows = {
+        n: {"min": min(s), "series": s, "external_shares": shares[n]}
+        for n, s in series.items()
+    }
     print(
         json.dumps(
             {
                 "sf_dir": sf_dir,
-                "sentinel_series": sentinel_series,
-                "sentinel_floor_ratio": floor_ratio,
-                "quiet_window": floor_ratio <= 1.3,
+                "external_share_bound": EXTERNAL_SHARE_BOUND,
+                "quiet_window": all(
+                    min(s) <= EXTERNAL_SHARE_BOUND for s in shares.values()
+                ),
                 "entries": rows,
                 "should_promote": sorted(
                     n for n, r in rows.items() if r["min"] > 2.0

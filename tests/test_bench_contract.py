@@ -66,86 +66,6 @@ def test_headline_and_exclusions_resolve():
     assert all(isinstance(r, str) and r.strip() for r in excluded.values())
 
 
-def test_affected_from_log_attribution():
-    """r14 second-review pins: the retry's slow-tick→query attribution
-    must survive dropped/timed-out ticks (position-keyed, no index
-    shift), brand the final block from the closing tick, and return
-    nothing for a flat series."""
-    from bench import affected_from_log
-
-    names = [f"q{i}" for i in range(20)]
-    timed = set(names)
-
-    # flat series → nothing to re-time
-    flat = [(0.2, 0), (0.21, 5), (0.2, 10), (0.22, 15), (0.2, 20)]
-    assert affected_from_log(flat, names, timed) == []
-
-    # one slow mid-window tick at position 10 brands q5..q14 (both
-    # neighboring blocks — the tick ran between them)
-    mid = [(0.2, 0), (0.2, 5), (0.9, 10), (0.2, 15), (0.2, 20)]
-    assert affected_from_log(mid, names, timed) == [
-        f"q{i}" for i in range(5, 15)
-    ]
-
-    # a TIMED-OUT tick is recorded capped at its position — it must
-    # brand its neighborhood, and later ticks keep their own positions
-    # (the old series-index scheme shifted everything left)
-    capped = [(0.2, 0), (60.0, 5), (0.2, 10), (0.2, 15), (0.2, 20)]
-    assert affected_from_log(capped, names, timed) == [
-        f"q{i}" for i in range(0, 10)
-    ]
-
-    # the closing tick (position == len(names)) brands the FINAL block,
-    # not an empty slice
-    closing = [(0.2, 0), (0.2, 5), (0.2, 10), (0.2, 15), (0.9, 20)]
-    assert affected_from_log(closing, names, timed) == [
-        f"q{i}" for i in range(15, 20)
-    ]
-
-    # entries without a timing are excluded; order is preserved, dups
-    # collapsed when two slow ticks overlap
-    overlap = [(0.9, 5), (0.9, 10), (0.2, 15), (0.2, 0), (0.2, 20)]
-    got = affected_from_log(overlap, names, timed - {"q7"})
-    assert got == [f"q{i}" for i in range(0, 15) if i != 7]
-
-    assert affected_from_log([], names, timed) == []
-
-    # ADVICE r14: sustained storm — half or more of the ticks slow. A
-    # median baseline equals the slow value and brands NOTHING despite
-    # contended=true; the quiet-band-floor baseline needs only the one
-    # quiet tick to anchor and brands every slow tick's neighborhood.
-    storm = [(0.2, 0), (0.9, 5), (0.9, 10), (0.9, 15), (0.9, 20)]
-    assert affected_from_log(storm, names, timed) == [
-        f"q{i}" for i in range(0, 20)
-    ]
-
-    # r15 self-review: quiet-band jitter up to ~1.7x floor (the
-    # committed quiet twins' own spread) must NOT brand — the 2x
-    # threshold keeps the bounded retry targeted at storm ticks only
-    jitter = [(0.2, 0), (0.34, 5), (0.31, 10), (0.2, 15), (0.26, 20)]
-    assert affected_from_log(jitter, names, timed) == []
-
-    # ADVICE r15: one implausibly FAST tick (below 0.7x the committed
-    # best-ever quiet floor of 0.140 s) is a measurement fluke, not a
-    # quiet anchor — on a 1.4-1.9x host epoch it would otherwise brand
-    # nearly the whole window. The fluke is dropped; the remaining
-    # plausible ticks (ordinary epoch jitter) brand nothing.
-    fluke = [(0.05, 0), (0.21, 5), (0.22, 10), (0.2, 15), (0.26, 20)]
-    assert affected_from_log(fluke, names, timed) == []
-
-    # ...but the guard must NOT break storm anchoring: a plausible
-    # quiet tick (>= 0.7 * 0.140) still anchors, and storm ticks brand
-    fluke_storm = [(0.15, 0), (0.9, 5), (0.9, 10), (0.9, 15), (0.9, 20)]
-    assert affected_from_log(fluke_storm, names, timed) == [
-        f"q{i}" for i in range(0, 20)
-    ]
-
-    # degenerate: EVERY tick implausibly fast (a genuinely faster
-    # host) falls back to the raw min instead of inventing a floor
-    allfast = [(0.05, 0), (0.05, 5), (0.05, 10), (0.05, 15), (0.05, 20)]
-    assert affected_from_log(allfast, names, timed) == []
-
-
 def test_core32_is_frozen_and_registered():
     """CORE_32 (VERDICT r14 #4) must stay exactly the round-4 artifact
     membership — 32 names, all registered, all in HEADLINE — so
@@ -207,22 +127,60 @@ def test_printed_line_is_compact():
         "contended": False,
         "artifact": "BENCH_LATEST.json",
         # provenance that must NOT leak to stdout
-        "sentinel_series": [0.1] * 40,
+        "pass_shares": {n: [0.012] * 3 for n in mod.HEADLINE},
         "pass_counts": {n: 3 for n in mod.HEADLINE},
-        "min_phase_counts": {"main": 87},
-        "phase_sentinels": {"main": [0.1] * 40},
-        "late_recapture": {},
+        "min_pass_share": {n: 0.012 for n in mod.HEADLINE},
+        "external_share_bound": 0.10,
+        "storm_tainted_entries": [],
         "outlier_repass": {},
-        "load_gate": {"waits_s": []},
         "noisy_floors": {},
     }
     line = mod.contract_line(out)
     parsed = json.loads(line)
     assert set(parsed) == set(mod.CONTRACT_LINE_FIELDS) & set(out)
-    assert "pass_counts" not in parsed and "sentinel_series" not in parsed
+    assert "pass_counts" not in parsed and "pass_shares" not in parsed
     assert "\n" not in line
     assert len(line) < 6000, f"printed line grew to {len(line)} chars"
     # contract fields the driver greps for are all present
     for k in ("metric", "value", "unit", "queries", "sf"):
         assert k in parsed
     assert len(parsed["queries"]) == len(mod.HEADLINE)
+
+
+def test_bench_reads_only_pinned_env_vars():
+    """bench.py's options are exactly these environment variables; a
+    new knob has to be added here on purpose."""
+    import ast
+
+    tree = ast.parse((_ROOT / "bench.py").read_text())
+
+    def _is_environ(node) -> bool:
+        return (
+            isinstance(node, ast.Attribute)
+            and node.attr == "environ"
+            and isinstance(node.value, ast.Name)
+            and node.value.id == "os"
+        )
+
+    keys = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Subscript) and _is_environ(node.value):
+            keys.add(node.slice.value)
+        elif (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and (
+                _is_environ(node.func.value)
+                or (
+                    node.func.attr == "getenv"
+                    and isinstance(node.func.value, ast.Name)
+                    and node.func.value.id == "os"
+                )
+            )
+        ):
+            keys.add(node.args[0].value)
+    assert keys == {
+        "SPARK_GRAFT_SF_DIR",
+        "SPARK_GRAFT_BENCH_BUDGET_S",
+        "SPARK_DRIVER_MEM",
+    }
